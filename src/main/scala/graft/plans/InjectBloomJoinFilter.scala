@@ -72,9 +72,13 @@ object InjectBloomJoinFilter extends Rule[LogicalPlan] with PredicateHelper {
     def canFilterRight(jt: Any): Boolean =
       jt == Inner || jt == LeftOuter || jt == LeftSemi || jt == LeftAnti
 
+    // Streaming joins skip: in a stream-stream join a micro-batch's
+    // side holds only that batch's rows while the join also matches
+    // the state of earlier batches, so a bloom-negative row can still
+    // meet its match in a later batch.
     plan.transformUp {
       case j @ Join(left, right, jt, Some(cond), hint)
-          if canFilterLeft(jt) || canFilterRight(jt) =>
+          if (canFilterLeft(jt) || canFilterRight(jt)) && !j.isStreaming =>
         // first equi-pair split by side; a multi-key join blooms on
         // one key (still zero false negatives — just less selective)
         val keys = splitConjunctivePredicates(cond).collectFirst {

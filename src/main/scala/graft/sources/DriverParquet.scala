@@ -25,21 +25,23 @@ private[graft] object DriverParquet {
 
   def schema(s: String): MessageType = MessageTypeParser.parseMessageType(s)
 
+  private val TmpName = ".part-00000.parquet.tmp"
+
   /** Overwrite `dir` with a single parquet file holding `rows`.
     * Crash-safe ordering: the new file is fully written under a
     * tmp name readers ignore (dot-prefixed, non-`.parquet`), the old
     * contents are deleted only after the writer closes, and the tmp
     * renames into the final name LAST — a reader can race an
     * in-flight overwrite and see the old file or (after a crash
-    * between delete and rename) a loudly-missing one, but never a
-    * truncated file under the final name. */
+    * between delete and rename) a loud failure from [[read]], but
+    * never a truncated file under the final name. */
   def overwrite(spark: SparkSession, dir: String, mt: MessageType)
       (fill: SimpleGroupFactory => Seq[Group]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     fs.mkdirs(d)
-    val tmp = new Path(d, ".part-00000.parquet.tmp")
+    val tmp = new Path(d, TmpName)
     fs.delete(tmp, false) // crashed-attempt debris
     val w = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(tmp, conf))
@@ -55,15 +57,20 @@ private[graft] object DriverParquet {
   }
 
   /** Every row of every parquet file directly under `dir` (sidecars
-    * are bounded by contract — this is a driver-side value). */
+    * are bounded by contract — this is a driver-side value). A dir
+    * holding only an [[overwrite]] tmp is a crashed overwrite, not an
+    * empty sidecar: it throws rather than read as zero rows. */
   def read(spark: SparkSession, dir: String): Seq[Group] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
+    val files = fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath)
+    val parts = files.filter(_.getName.endsWith(".parquet"))
+    if (parts.isEmpty && files.exists(_.getName == TmpName))
+      throw new IllegalStateException(s"DriverParquet: $dir holds only " +
+        s"$TmpName — an overwrite crashed before its rename")
     val out = Seq.newBuilder[Group]
-    fs.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
+    parts.sortBy(_.getName)
       .foreach { f =>
         val r = org.apache.parquet.hadoop.ParquetReader
           .builder(new GroupReadSupport(), f).withConf(conf).build()

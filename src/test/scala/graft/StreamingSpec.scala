@@ -1746,4 +1746,37 @@ class StreamingSpec extends AnyFunSuite {
         "query A's replayed batch 1 must not land twice")
     } finally spark.sparkContext.setLocalProperty(key, null)
   }
+
+  test("stream-stream join keeps a rate committed before its order") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val orders = MemoryStream[String]
+    val rates = MemoryStream[String]
+    val out = OrderEnrichmentJob.pipeline(
+      orders.toDF().toDF("value"), rates.toDF().toDF("value"),
+      Duration.ofSeconds(5))
+    val q = out.writeStream.format("memory").queryName("enriched_split")
+      .outputMode("append").start()
+    try {
+      // the rate lands in its own micro-batch, with no order in it: a
+      // join rewrite that prefilters the rate side by the batch's
+      // orders would drop it before it reaches the join state
+      rates.addData(
+        """{"exchangeRateTime": "2024-01-01T00:00:00Z", "currency": "EUR", "rate": 3}""")
+      q.processAllAvailable()
+      val consumed = eventually(q.recentProgress.map(_.numInputRows).sum)(
+        _ >= 1, timeoutMs = 10000L)
+      assert(consumed >= 1, "the rate's micro-batch never ran")
+      orders.addData(
+        """{"id": 7, "orderTime": "2024-01-01T00:00:02Z", "amount": 10, "currency": "EUR"}""")
+      q.processAllAvailable()
+      val hit = (rows: Array[String]) =>
+        rows.exists(r => r.contains("\"id\":7") &&
+          r.contains("\"converted_amount\":30"))
+      val rows = eventually(
+        spark.sql("SELECT value FROM enriched_split").as[String].collect())(
+        hit, timeoutMs = 10000L)
+      assert(hit(rows), s"order 7 lost its earlier rate: [${rows.mkString("; ")}]")
+    } finally q.stop()
+  }
 }
