@@ -750,17 +750,23 @@ object Dedup {
     // sequence(1, 0) DESCENDS and would emit a spurious
     // empty-string variant (the collocations guard discipline)
     //
-    // r15: the candidate join shuffles (key-hash, id) ONLY — a 4-byte
-    // murmur3 of the variant plus the id, instead of (variant string,
-    // id, full name) (guide §2.3/§8: shuffle keys, not payloads; the
-    // hash is high-entropy and incompressible, so the narrowest hash
-    // that keeps collisions rare wins). Hashing the variant key can
-    // only ADD candidates (collisions) and the exact levenshtein
-    // verify removes them, so the result is unchanged; names
-    // re-attach to the deduped id pairs afterwards (ids are unique by
-    // the operator's contract — `the` id column — so the attach is
-    // 1:1).
-    val variants = base.select(col("__id"),
+    // r15: the candidate join shuffles (key-hash, id) ONLY — an
+    // 8-byte xxhash64 of the variant plus the id, instead of (variant
+    // string, id, full name) (guide §2.3/§8: shuffle keys, not
+    // payloads). 64 bits, not murmur3's 32: beyond ~2³² variant rows
+    // a 32-bit key collides on nearly every bucket. Hashing the
+    // variant key can only ADD candidates (collisions) and the exact
+    // levenshtein verify removes them, so the result is unchanged;
+    // names re-attach to the deduped id pairs afterwards (ids are
+    // unique by the operator's contract — `the` id column — so the
+    // attach is 1:1).
+    //
+    // A null name never matches (levenshtein of null is null), so it
+    // builds no variants: hashing null yields the seed, and every
+    // null-name row would otherwise cross-join every other. The
+    // re-attach below reads the UNFILTERED base, so a null id still
+    // hits the raise_error guard whatever its name.
+    val variants = base.where(col("__nm").isNotNull).select(col("__id"),
       explode(array_union(array(col("__nm")),
         when(length(col("__nm")) >= 1,
           transform(sequence(lit(1), length(col("__nm"))),
@@ -768,7 +774,7 @@ object Dedup {
               col("__nm").substr(i + 1,
                 length(col("__nm")) - i))))
           .otherwise(array().cast("array<string>")))).as("__key"))
-      .select(col("__id"), hash(col("__key")).as("__kh"))
+      .select(col("__id"), xxhash64(col("__key")).as("__kh"))
     // dedupe the UNORDERED id pair (lo < hi) so each candidate enters
     // the distinct once, then orient the emitted pair by NAME order
     // after the attach — the output contract (name_a < name_b)

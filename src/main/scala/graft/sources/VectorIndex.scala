@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -137,7 +137,11 @@ object VectorIndex {
         withMips.withColumn("bqhi", bqHalf(col("q"), 0, 31))
           .withColumn("bqlo", bqHalf(col("q"), 32, 63))
       }
+    // the cells write counts its own rows (an observed metric, no
+    // extra job) for the vec_id uniqueness check below
+    val written = Observation("vector-index-cells")
     withBq
+      .observe(written, count(lit(1)).as("rows"))
       .repartition(col("cluster"))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("cluster")
@@ -150,8 +154,15 @@ object VectorIndex {
     // stats/centroids discipline)
     val cnts = assigned.groupBy("cluster").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
+    // a duplicate vec_id fans out through the vec_id joins: the cells
+    // would hold more rows than the occupancy sidecar counts, and
+    // appends would over-admit past capacity
+    val assignedRows = cnts.map(_._2).sum
+    val cellRows = written.get("rows").asInstanceOf[Long]
+    require(cellRows == assignedRows, s"VectorIndex.build: $idCol is not " +
+      s"unique ($cellRows cell rows for $assignedRows assigned rows)")
     writeCounts(spark, s"$path/counts", cnts)
-    writeStats(spark, s"$path/stats", cnts.map(_._2).sum, clusters, scale,
+    writeStats(spark, s"$path/stats", assignedRows, clusters, scale,
       capacity, dim, foldedThrough = -1L)
   }
 

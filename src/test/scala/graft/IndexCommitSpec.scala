@@ -84,6 +84,23 @@ class IndexCommitSpec extends AnyFunSuite {
     assert(VectorIndex.readSqRanges(spark, idx)._1.nonEmpty)
   }
 
+  test("vector index build refuses a duplicated vec_id") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(3)
+    val rows = (0L until 40L).map(i => (i, Array.fill(4)(rnd.nextGaussian())))
+    val corpus = (rows :+ rows(5)).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.build(corpus, "vec_id", "embedding", tmpDir("graft_vdup"),
+        clusters = 4, iterations = 2, capacity = 41, maxRounds = 6)
+    }
+    assert(e.getMessage.contains("vec_id is not unique"), e.getMessage)
+    // the same corpus without the duplicate builds
+    VectorIndex.build(rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      tmpDir("graft_vuniq"), clusters = 4, iterations = 2, capacity = 40,
+      maxRounds = 6)
+  }
+
   test("gram index delete + compact: crash at every root mutation") {
     import spark.implicits._
     FaultyFs.register(spark.sparkContext.hadoopConfiguration)

@@ -2484,6 +2484,31 @@ class OperatorsSpec extends AnyFunSuite {
       s"non-numeric id must raise, got: ${msgs(badId)}")
   }
 
+  test("typo pairs: null names add no pairs, a null id still raises, the key is 64-bit") {
+    val named = Seq(1L -> "abc", 2L -> "abd", 3L -> "ab", 4L -> "xyz")
+      .map { case (i, n) => (Option(i), Option(n)) }
+    val nulls = (10L until 16L).map(i => (Option(i), Option.empty[String]))
+    def pairs(rows: Seq[(Option[Long], Option[String])]) =
+      Dedup.typoPairs(rows.toDF("id", "nm"), "id", "nm").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
+        .toSet
+    assert(pairs(named ++ nulls) == pairs(named))
+    assert(pairs(named) == Set((1L, 2L, "abc", "abd"), (3L, 1L, "ab", "abc"),
+      (3L, 2L, "ab", "abd")))
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    // a null id raises whether or not its row builds variants
+    for (bad <- Seq((None, None), (None, Some("abe")))) {
+      val e = intercept[Throwable](pairs(named :+ bad))
+      assert(msgs(e).exists(_.contains("null or non-numeric")),
+        s"null id with name ${bad._2} must raise, got: ${msgs(e)}")
+    }
+    val plan = Dedup.typoPairs(named.toDF("id", "nm"), "id", "nm")
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("xxhash64(") && !"(?<!xx)hash\\(".r.findFirstIn(plan).isDefined,
+      s"the candidate key must be xxhash64:\n$plan")
+  }
+
   test("modularity: exact integers on bridged cliques, trivial partition scores zero") {
     val k4a = for (i <- 0 to 3; j <- (i + 1) to 3) yield (i.toLong, j.toLong)
     val k4b = for (i <- 10 to 13; j <- (i + 1) to 13) yield (i.toLong, j.toLong)
